@@ -57,10 +57,10 @@ object Baskets {
     * stream. */
   /** `packPairKeys` — an EXPLICIT int32-ids contract flag (guide §2.3,
     * narrower shuffle keys): when the caller can promise every item id
-    * fits an unsigned 32-bit value (0 ≤ id < 2³¹), the basket self-join
-    * carries the item as an INT instead of a LONG and the pair aggregate
-    * shuffles ONE packed long key (item_a·2³² | item_b) instead of two
-    * long columns — about a third off the pair-agg shuffle bytes, the
+    * fits a non-negative signed 32-bit value (0 ≤ id < 2³¹), the basket
+    * self-join carries the item as an INT instead of a LONG and the pair
+    * aggregate shuffles ONE packed long key (item_a·2³² | item_b) instead
+    * of two long columns — about a third off the pair-agg shuffle bytes, the
     * engine's largest shuffle per input byte. The contract is enforced
     * IN-PLAN: an id outside [0, 2³¹) refuses loudly (raise_error) before
     * any pair forms — never silent corruption. Output is bit-identical to

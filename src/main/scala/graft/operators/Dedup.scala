@@ -1351,12 +1351,13 @@ object Dedup {
 
   /** The observed metrics row of a just-checkpointed round relation, with
     * a BOUNDED wait (r16 ADVICE): the loop fusions rely on observations
-    * firing on the eager (local)checkpoint action — probed empirically on
-    * Spark 4.1 (ObsCkptProbe) — and a future Spark that stopped routing
-    * checkpoint through withAction would otherwise hang both clustering
-    * loops forever inside `Observation.get`. On timeout the caller's
-    * fallback recomputes the metrics from the checkpointed relation — one
-    * extra pass, correct either way, never a hang. */
+    * firing on the eager (local)checkpoint action — pinned on Spark 4.1 by
+    * ClustersFusedLoopSpec's one-action-per-round budgets — and a future
+    * Spark that stopped routing checkpoint through withAction would
+    * otherwise hang both clustering loops forever inside `Observation.get`.
+    * On timeout the caller's fallback recomputes the metrics from the
+    * checkpointed relation — one extra pass, correct either way, never a
+    * hang. */
   private def observedRowOr(obs: org.apache.spark.sql.Observation)(
       fallback: => org.apache.spark.sql.Row): org.apache.spark.sql.Row =
     try scala.concurrent.Await.result(

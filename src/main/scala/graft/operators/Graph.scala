@@ -116,7 +116,11 @@ object Graph {
             (base + coalesce(col("mass"), lit(0L))).as("pr_x1e9")))
       liveRounds ::= scores
       if (i % flushRounds == 0 && i < iters) {
-        scores = scores.localCheckpoint(true) // eager; truncates lineage
+        // eager; truncates lineage. The checkpoint's blocks are never
+        // unpersisted here: like Dedup's round checkpoints, each flush's
+        // localCheckpoint RDD is released by GC (the ContextCleaner) once
+        // the next flush leaves it unreachable
+        scores = scores.localCheckpoint(true)
         liveRounds.foreach(_.unpersist(blocking = false)) // newest first
         liveRounds = Nil
       }

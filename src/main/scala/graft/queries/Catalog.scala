@@ -32,7 +32,7 @@ object Catalog {
 
   // single-source gate parameterizations live in GateSupport (the family
   // catalogs interpolate them); re-exported here for external consumers
-  // (Sf1Drive, the probe drivers)
+  // (Sf1Drive)
   val ContainmentGateThreshold: Double = GateSupport.ContainmentGateThreshold
   val ContainmentGateMinShingles: Int = GateSupport.ContainmentGateMinShingles
   val TfidfGateThreshold: Double = GateSupport.TfidfGateThreshold

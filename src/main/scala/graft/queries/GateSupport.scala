@@ -15,11 +15,17 @@ private[queries] object Fixtures {
   // paid one fixed job latency per fixture table before any real work
   // (guide §1.2: don't compute things twice — the fixture schemas are
   // static). Caches METADATA only; every read still scans the data fresh.
-  private val schemaCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.types.StructType]
+  // Keyed on (path, modification time, length) — one driver-side Hadoop
+  // FileStatus lookup, no Spark job — so a parquet rewritten at the same
+  // path is re-inferred instead of read under its old schema.
+  private val schemaCache = scala.collection.concurrent.TrieMap
+    .empty[(String, Long, Long), org.apache.spark.sql.types.StructType]
 
   def pq(spark: SparkSession, path: String): DataFrame = {
-    val s = schemaCache.getOrElseUpdate(path, spark.read.parquet(path).schema)
+    val p = new org.apache.hadoop.fs.Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+    val s = schemaCache.getOrElseUpdate((path, st.getModificationTime, st.getLen),
+      spark.read.parquet(path).schema)
     spark.read.schema(s).parquet(path)
   }
   /** `events` with `ts` normalized to BIGINT epoch NANOSECONDS whatever the

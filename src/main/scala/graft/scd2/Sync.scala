@@ -187,8 +187,8 @@ final class Synchronizer(
   private def nowTs: java.sql.Timestamp = new java.sql.Timestamp(Synchronizer.nextMillis())
 
   /** Label the Spark jobs `body` runs with the engine step that issued them
-    * (guide §1.5): job-level attribution in the UI / JobTrace, zero effect
-    * on semantics. Restores the caller's own description afterwards; the
+    * (guide §1.5): job-level attribution in the UI / `Profile trace`, zero
+    * effect on semantics. Restores the caller's own description afterwards; the
     * async helper snapshots the label at spawn, so overlapped steps carry
     * their own names. */
   private def labeled[A](step: String)(body: => A): A = {
@@ -720,6 +720,18 @@ final class Synchronizer(
         // scale); on the empty corner (all rows deleted) the just-created
         // table is dropped, restoring the not-exists state the old
         // no-write path preserved.
+        // Crash window: a crash between the overwrite and dropTable
+        // leaves an EMPTY latest_pk_version. Its content is still true
+        // (n = 0: history holds no live row since the last full load);
+        // only the next sync's path changes. The table exists, so
+        // deltaLoad skips this restore and runs the delta steps instead
+        // of the full load the dropped state would force: NoLoad while the
+        // source matches primary_keys_ts; otherwise step 2 loads the rows
+        // beyond the local watermark, step 3 finds every other snapshot pk
+        // absent from the empty old version and re-appends it as a strange
+        // update, step 4 rebuilds the snapshot, and step 3.5 writes no
+        // tombstones. History ends with the live rows a full load would
+        // have written, flagged __is_full_load = false.
         val obs = org.apache.spark.sql.Observation()
         dest.latestPkVersion.overwrite(
           df.observe(obs, count(lit(1)).as("n")))

@@ -57,6 +57,10 @@ class PipelineOpsSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 2L)))
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
+    // the hot-bucket cap: at maxBucketSize = 1 every shared bucket is
+    // dropped, so not even the near-duplicate pair survives
+    assert(Dedup.minhashLshPairs(df, "doc_id", "text", threshold = 0.5,
+      maxBucketSize = 1).count() == 0L)
   }
 
   test("incremental minhash vs persisted index equals batch-mode cross pairs") {
@@ -82,8 +86,14 @@ class PipelineOpsSpec extends SparkSuite {
     val batchDf = batch.toDF("doc_id", "text")
     val dir = tmpDir("mh-idx")
     Dedup.minhashIndex(corpusDf, "doc_id", "text").write.mode("overwrite").parquet(dir)
-    val inc = Dedup.minhashLshIncremental(batchDf, spark.read.parquet(dir),
+    val incDf = Dedup.minhashLshIncremental(batchDf, spark.read.parquet(dir),
         "doc_id", "text", threshold = 0.5)
+    // plan: the index-side hot-bucket guard is a broadcast anti-join, and
+    // no join degrades to a cartesian or nested loop
+    val plan = incDf.queryExecution.executedPlan.toString
+    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"), plan)
+    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"), plan)
+    val inc = incDf
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val unionPairs = Dedup.minhashLshPairs(
         corpusDf.unionByName(batchDf), "doc_id", "text", threshold = 0.5)
@@ -684,6 +694,11 @@ class PipelineOpsSpec extends SparkSuite {
       spark, s"$tmp/in", schema, "doc_id", "text", s"$tmp/out", s"$tmp/ckpt")
     val r2 = spark.read.parquet(s"$tmp/out").collect().map(_.getLong(0)).sorted.toSeq
     assert(r2 == Seq(1L, 3L, 5L)) // 4 duplicated batch-1 content across runs
+
+    // a third run with NO new input leaves the output unchanged
+    graft.streaming.StatefulDedup.runAvailableNow(
+      spark, s"$tmp/in", schema, "doc_id", "text", s"$tmp/out", s"$tmp/ckpt")
+    assert(spark.read.parquet(s"$tmp/out").collect().map(_.getLong(0)).sorted.toSeq == r2)
   }
 
   test("streaming: AvailableNow windowed aggregation over a file stream") {

@@ -59,6 +59,12 @@ class Scd2ScenarioSpec extends SparkSuite {
     val sync2 = new Synchronizer(spark, source, destPath, cfg)
     assert(sync2.execute() == LoadResult.NoLoad)
 
+    // --- a held destination lock refuses a second writer
+    sync2.dest.acquireLock()
+    try intercept[IllegalStateException](
+      new Synchronizer(spark, source, destPath, cfg).execute())
+    finally sync2.dest.releaseLock()
+
     // --- mutate: insert 4,5; update 3 (ts forward); delete 1
     userDf(Seq(
       (2L, "Peter", "Johniingham", 23.0, "c1", 101L),

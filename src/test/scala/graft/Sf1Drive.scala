@@ -30,7 +30,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Run: `sbt "Test/runMain graft.Sf1Drive"` (documents gates) and
   * `sbt "Test/runMain graft.Sf1Drive emb"` (embedding gates); then
-  * `python3 tools/sf1_check.py` / `python3 tools/sf1_check.py emb`. */
+  * `python3 tools/sf1_check.py` / `python3 tools/sf1_check.py emb`.
+  * `sbt "Test/runMain graft.Sf1Drive <gate>"` re-runs one Catalog gate
+  * over the corpora an earlier sweep synthesized. */
 object Sf1Drive {
   val gates = Seq("dedup_spans", "dedup_minhash_incremental", "dedup_editdist",
     // round-16: the editdist persisted-index serving form (same per-copy
@@ -127,8 +129,22 @@ object Sf1Drive {
       case Some("graph") => runGraph(spark)
       case Some("streaming") => runStreaming(spark)
       case Some("events") => runEvents(spark)
-      case _ => runDocs(spark)
+      // any other argument names ONE Catalog gate, run against the
+      // already-synthesized corpora (run its sweep first): adds a gate to
+      // an existing sweep without paying the full drive again
+      case Some(gate) => runGate(spark, gate)
+      case None => runDocs(spark)
     }
+  }
+
+  /** Run one Catalog gate over the synthesized corpora and dump its output. */
+  private def runGate(spark: SparkSession, g: String): Unit = {
+    val t0 = System.nanoTime()
+    graft.queries.Catalog.queries(g)(spark, out)
+      .write.mode("overwrite").parquet(s"$outDir/$g")
+    graft.operators.Dedup.releaseIntermediates()
+    println(f"GATE $g ${(System.nanoTime() - t0) / 1e9}%.1f s " +
+      s"rows=${spark.read.parquet(s"$outDir/$g").count()}")
   }
 
   /** Event-analytics sweep at 10× (round-15, r14 verdict item 3): ten
@@ -156,14 +172,6 @@ object Sf1Drive {
         col("event_type"), col("value"), col("props"))
       .write.mode("overwrite").parquet(s"$out/events.parquet")
     println(s"event corpus rows=${spark.read.parquet(s"$out/events.parquet").count()}")
-    def run(g: String): Unit = {
-      val t0 = System.nanoTime()
-      graft.queries.Catalog.queries(g)(spark, out)
-        .write.mode("overwrite").parquet(s"$outDir/$g")
-      graft.operators.Dedup.releaseIntermediates()
-      println(f"GATE $g ${(System.nanoTime() - t0) / 1e9}%.1f s " +
-        s"rows=${spark.read.parquet(s"$outDir/$g").count()}")
-    }
     Seq("event_funnel", "event_funnel_incremental", "event_funnel_window",
       "event_funnel_rates", "event_rate_features", "streaming_funnel_ingest",
       "streaming_retention_ingest", "asof_join_forward",
@@ -184,9 +192,9 @@ object Sf1Drive {
       "timeseries_gapfill_incremental", "timeseries_change_ratio",
       "event_audience_overlap_incremental",
       "event_attribution_linear", "agg_hll_cube",
-      "streaming_gapfill_ingest").foreach(run)
+      "streaming_gapfill_ingest").foreach(runGate(spark, _))
     synthDocs(spark)
-    run("streaming_clean_ingest")
+    runGate(spark, "streaming_clean_ingest")
   }
 
   /** Streaming table source at 10× (round-11): the 1.5M-row synthesized
@@ -410,7 +418,9 @@ object Sf1Drive {
     dump("scd2_strange_inline", Scenarios.history(spark, destS))
   }
 
-  private def synthDocs(spark: SparkSession): Unit = {
+  /** Writes the 10× salted document corpus to `<dst>/documents.parquet`
+    * (also the corpus `Profile scale` times its gates on). */
+  private[graft] def synthDocs(spark: SparkSession, dst: String = out): Unit = {
     val docs0 = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
     val copies = spark.range(0, 10).select(col("id").as("cp"))
     docs0.crossJoin(broadcast(copies))
@@ -418,8 +428,8 @@ object Sf1Drive {
         concat_ws(" ", transform(split(col("text"), " "),
           t => concat(t, lit("_"), col("cp"), col("cp")))).as("text"),
         col("lang"), col("source"), col("n_chars"))
-      .write.mode("overwrite").parquet(s"$out/documents.parquet")
-    println(s"doc corpus rows=${spark.read.parquet(s"$out/documents.parquet").count()}")
+      .write.mode("overwrite").parquet(s"$dst/documents.parquet")
+    println(s"doc corpus rows=${spark.read.parquet(s"$dst/documents.parquet").count()}")
   }
 
   private def runDocs(spark: SparkSession): Unit = {

@@ -112,6 +112,10 @@ class StoreSpec extends SparkSuite {
     assert(out(0).getSeq[Double](1) == Seq(1.0, 2.0)) // floats read back widened
     val meta0 = out(0).getStruct(2)
     assert(meta0.getString(0) == "a" && meta0.getLong(1) == 10L)
+    // further plain appends onto the widened array column keep committing
+    Seq(3L, 4L).foreach(i =>
+      t.append(Seq((i, Seq(4.0d), ("c", 30L))).toDF("id", "emb", "meta")))
+    assert(t.read().count() == 4L)
     // incompatible nested changes still rejected
     intercept[IllegalArgumentException] {
       SchemaEvolution.widen(ArrayType(LongType), ArrayType(IntegerType))

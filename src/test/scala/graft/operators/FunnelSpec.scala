@@ -110,6 +110,13 @@ class FunnelSpec extends SparkSuite {
     val want = Temporal.funnel(df(all), "user_id", "event_type", "ts", steps)
       .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
     assert(got == want)
+    // a three-way fold (batch 2 cut again at ts 150) lands on the same result
+    val (b2a, b2b) = b2.partition(_._3 <= 150L)
+    val folded3 = Temporal.funnelFold(
+      Temporal.funnelFold(st, df(b2a), "user_id", "event_type", "ts", steps),
+      df(b2b), "user_id", "event_type", "ts", steps)
+    assert(Temporal.funnelOf(folded3).collect()
+      .map(r => r.getLong(0) -> r.toSeq.tail).toMap == want)
     // the non-entered key 3 was CARRIED in the state (null chain) so its
     // pre-cut max_ts could gate late data — but never served
     assert(Temporal.funnelOf(st).collect().map(_.getLong(0)).toSet == Set(1L, 2L))

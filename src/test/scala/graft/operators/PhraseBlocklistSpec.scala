@@ -111,6 +111,17 @@ class PhraseBlocklistSpec extends SparkSuite {
     val e3 = intercept[Exception](
       NativeHash.phraseMatchCount(col("text"), Seq("ok", "")))
     assert(e3.getMessage.contains("non-empty"), e3.getMessage)
+    // the other registered functions follow the same rule: a non-literal
+    // int argument, a non-foldable phrase array and a non-array input all
+    // fail when the query is analyzed
+    val e4 = intercept[Exception](
+      spark.sql("SELECT graft_minhash(split('a b', ' '), 1 + 7)").collect())
+    assert(e4.getMessage.contains("numHashes"), e4.getMessage)
+    val e5 = intercept[Exception](
+      spark.sql("SELECT graft_phrase_matches('x', array(rand()::string))").collect())
+    assert(e5.getMessage.contains("foldable"), e5.getMessage)
+    intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT graft_simhash(42)").collect())
   }
 
   test("10k-phrase scale probe: build is sub-second-ish, matching is allocation-free fast") {

@@ -70,6 +70,16 @@ class TemporalGuardSpec extends SparkSuite {
       Temporal.asofJoinForward(leftLong, rightInt, "k", "k2", "lts", "rts",
         Seq("pay"), "pay")
     }
+    // an unknown payload column and a reserved __-prefixed left column
+    // refuse before any plan is built
+    refusedBy("rightPayload") {
+      Temporal.asofJoin(leftLong, rightInt, "k", "k2", "lts", "rts",
+        Seq("nope"), "pay")
+    }
+    refusedBy("reserves __") {
+      Temporal.asofJoin(leftLong.withColumnRenamed("k", "__k"), rightInt,
+        "__k", "k2", "lts", "rts", Seq("pay"), "pay")
+    }
     // int left against long right widens losslessly — passes and matches
     val leftInt = Seq((1, 100)).toDF("k", "lts")
       .select(col("k").cast("long").as("k"), col("lts").cast("int").as("lts"))

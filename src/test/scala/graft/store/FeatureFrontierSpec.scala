@@ -81,6 +81,10 @@ class FeatureFrontierSpec extends SparkSuite {
     assert(stats.nonEmpty)
     assert(stats.forall(s => s.get("minValues").has("id")))
     assert(stats.forall(s => !s.get("minValues").has("v")))
+    // delete: a predicate over the variant column drops exactly its row
+    t.deleteWhere(variant_get(col("v"), "$.a", "int") === 1, allowProtocolUpgrade = true)
+    assert(DeltaTable.read(spark, root).select("id").as[Long].collect().sorted.toSeq ==
+      Seq(2L, 3L))
   }
 
   test("variantShredding-preview: genuinely shredded files read back unshredded") {
