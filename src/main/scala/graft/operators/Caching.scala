@@ -95,6 +95,26 @@ private[graft] object Caching {
     p
   }
 
+  /** Eager lineage-truncating checkpoint — the one materialization policy
+    * for the engine's iterative loops and per-batch state folds: the
+    * clustering rounds ([[Dedup.duplicateClusters]]), the PageRank flush
+    * ([[Graph.pageRankX1e9]]) and every streaming maintainer's
+    * materialize-before-commit ([[graft.streaming.StreamingIngest]]).
+    *
+    * Fault tolerance: without a checkpoint dir the cut is an eager
+    * `localCheckpoint` — fast, but non-reliable: an executor loss mid-run
+    * loses the checkpointed blocks and fails the job (rerun it). For long
+    * cluster runs where that risk matters, set
+    * `spark.sparkContext.setCheckpointDir(...)` before calling — every
+    * truncation then writes a RELIABLE checkpoint to that directory and
+    * survives executor loss at the cost of one FS write per cut. Reliable
+    * checkpoint files are removed only when
+    * `spark.cleaner.referenceTracking.cleanCheckpoints` is true (they
+    * otherwise outlive the run). */
+  private[graft] def truncate(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
+    else df.localCheckpoint(true)
+
   /** Unpersist every tracked intermediate registered since the last call.
     * PROCESS-WIDE: call between batches, not while another pipeline's
     * returned DataFrame is still un-consumed on a different thread — its

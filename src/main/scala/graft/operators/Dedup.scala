@@ -30,7 +30,7 @@ import graft.functions.TextFunctions._
   * entries otherwise accumulate local disk for the session's lifetime.
   */
 object Dedup {
-  import Caching.{spillPersist, spillPersistEager, spread}
+  import Caching.{spillPersist, spillPersistEager, spread, truncate}
 
   /** Unpersist every intermediate the pipeline operators persisted since
     * the last call (shared registry — see [[Caching.release]]). Call AFTER
@@ -1296,13 +1296,9 @@ object Dedup {
     * For `label`, certifying convergence needs the seed round plus one
     * confirming round, so `maxIters = 1` always throws — pass ≥ 2.
     *
-    * Fault tolerance: the iterative loops truncate lineage per round with
-    * an eager `localCheckpoint` — fast, but non-reliable: an executor loss
-    * mid-run loses checkpointed blocks and fails the job (rerun it). For
-    * long cluster runs where that risk matters, set
-    * `spark.sparkContext.setCheckpointDir(...)` before calling — the loops
-    * then use RELIABLE checkpointing to that directory and survive
-    * executor loss at the cost of per-round HDFS/FS writes. */
+    * Both loops truncate lineage per round through [[Caching.truncate]]
+    * (local, or reliable under a checkpoint dir — see its fault-tolerance
+    * note). */
   def duplicateClusters(
       pairs: DataFrame, maxIters: Int = 0,
       algorithm: String = "label"): DataFrame = algorithm match {
@@ -1339,20 +1335,11 @@ object Dedup {
     cc.unionByName(singletons)
   }
 
-  /** Eager lineage-truncating checkpoint for the iterative loops: each
-    * round's plan references the previous round's TWICE, so without
-    * truncation the logical plan doubles per round — exponential analyzer
-    * cost that aborts long-diameter runs (40 rounds = 2^40 plan nodes)
-    * long before data size matters. Reliable (checkpoint-dir) when the
-    * caller configured one, local otherwise — see [[duplicateClusters]]. */
-  private def roundCheckpoint(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
-    else df.localCheckpoint(true)
-
   /** The observed metrics row of a just-checkpointed round relation, with
     * a BOUNDED wait (r16 ADVICE): the loop fusions rely on observations
-    * firing on the eager (local)checkpoint action — pinned on Spark 4.1 by
-    * ClustersFusedLoopSpec's one-action-per-round budgets — and a future
+    * firing on the eager [[Caching.truncate]] action (local or reliable)
+    * — pinned on Spark 4.1 by ClustersFusedLoopSpec's one-action-per-round
+    * budgets, with and without a checkpoint dir — and a future
     * Spark that stopped routing checkpoint through withAction would
     * otherwise hang both clustering loops forever inside `Observation.get`.
     * On timeout the caller's fallback recomputes the metrics from the
@@ -1382,8 +1369,12 @@ object Dedup {
     // round 1 is a plain aggregation, no label join needed: with identity
     // initial labels, a node's closed-neighborhood minimum IS
     // least(id, min(neighbor ids)) — one colocated agg over the edge list
-    // seeds the loop a full round ahead
-    var labels = roundCheckpoint(
+    // seeds the loop a full round ahead. Every round is truncated: its plan
+    // references the previous round's TWICE, so without the cut the logical
+    // plan doubles per round — exponential analyzer cost that aborts
+    // long-diameter runs (40 rounds = 2^40 plan nodes) long before data
+    // size matters
+    var labels = truncate(
       edges.groupBy("dst").agg(min("src").as("mn"))
         .select(col("dst").as("id"), least(col("dst"), col("mn")).as("cluster_id")))
     var iters = 1
@@ -1400,12 +1391,13 @@ object Dedup {
         .join(labels.select(col("id").as("dst"), col("cluster_id").as("nl")), "dst")
         .select(col("src").as("id"), col("nl"), lit(null).cast(idType).as("own"))
       // the convergence count RIDES the checkpoint materialization as an
-      // Observation (fires on the eager localCheckpoint action — probed
-      // empirically on Spark 4.1): one job per round instead of a
-      // checkpoint job plus a count job, and at scale one fewer full pass
-      // over the labels per round (guide §1.2/§2.4: remove passes first)
+      // Observation (fires on the eager checkpoint action, local or
+      // reliable — probed empirically on Spark 4.1): one job per round
+      // instead of a checkpoint job plus a count job, and at scale one
+      // fewer full pass over the labels per round (guide §1.2/§2.4: remove
+      // passes first)
       val chgObs = org.apache.spark.sql.Observation()
-      val next = roundCheckpoint(
+      val next = truncate(
         self.unionByName(upd)
           .groupBy("id").agg(min("nl").as("cluster_id"), max("own").as("old"))
           .select(col("id"), col("cluster_id"),
@@ -1476,8 +1468,8 @@ object Dedup {
         .filter(col("su") =!= col("sv"))
         .unionByName(minU.select(col("u").as("su"), col("m").as("sv")))
         .distinct()
-      // eager checkpoint truncates lineage (see roundCheckpoint: per-round
-      // plan doubling is exponential without it); the round's edge count
+      // eager checkpoint truncates lineage (per-round plan doubling is
+      // exponential without it — see the label loop); the round's edge count
       // AND its fixpoint evidence both ride it as ONE Observation: a left
       // join against the previous (persisted) edge set marks edges not
       // present before, and `nextCnt == edgeCnt ∧ fresh == 0 ⟺ next ==
@@ -1489,7 +1481,7 @@ object Dedup {
       val cntObs = org.apache.spark.sql.Observation()
       val prev = edges.select(col("u").as("pu"), col("v").as("pv"),
         lit(true).as("__old"))
-      val next = roundCheckpoint(small.select(col("su").as("u"), col("sv").as("v"))
+      val next = truncate(small.select(col("su").as("u"), col("sv").as("v"))
         .join(prev, col("u") === col("pu") && col("v") === col("pv"), "left")
         .select(col("u"), col("v"), col("__old").isNull.as("__fresh"))
         .observe(cntObs, count(lit(1)).as("n"),

@@ -88,8 +88,8 @@ object Graph {
     // and a cached round is dead the moment the NEXT round materializes —
     // but a mid-action unpersist is impossible, so without a bound an
     // iters=50 run holds 50 cached score relations at once. Every
-    // `flushRounds` rounds the current round is EAGERLY localCheckpointed
-    // (truncating lineage — the flush MUST not be a bare count+unpersist:
+    // `flushRounds` rounds the current round is EAGERLY cut through
+    // `Caching.truncate` (the flush MUST not be a bare count+unpersist:
     // uncaching a relation that still-registered cache entries depend on
     // makes CacheManager recompile each dependent entry without its nested
     // InMemoryRelation, and the recompiled round plans compound to a
@@ -116,11 +116,11 @@ object Graph {
             (base + coalesce(col("mass"), lit(0L))).as("pr_x1e9")))
       liveRounds ::= scores
       if (i % flushRounds == 0 && i < iters) {
-        // eager; truncates lineage. The checkpoint's blocks are never
-        // unpersisted here: like Dedup's round checkpoints, each flush's
-        // localCheckpoint RDD is released by GC (the ContextCleaner) once
-        // the next flush leaves it unreachable
-        scores = scores.localCheckpoint(true)
+        // eager; truncates lineage (local, or reliable under a checkpoint
+        // dir). The checkpoint is never unpersisted here: like Dedup's
+        // round checkpoints, each flush's checkpoint RDD is released by GC
+        // (the ContextCleaner) once the next flush leaves it unreachable
+        scores = Caching.truncate(scores)
         liveRounds.foreach(_.unpersist(blocking = false)) // newest first
         liveRounds = Nil
       }

@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 import graft.SystemCols
+import graft.operators.Caching.truncate
 
 /** Structured-Streaming variants of the ingestion paths (SURVEY.md §2.9:
   * the reference is poll-based incremental batch; Spark's native analogue
@@ -16,6 +17,34 @@ import graft.SystemCols
   * system-columned projection the batch engine writes, so downstream
   * consumers (currentState, restore-pk) cannot tell the paths apart. */
 object StreamingIngest {
+
+  /** A maintainer's txn-watermark identity: `prefix` + md5(checkpointDir).
+    * The stream's identity for idempotency is its checkpoint: restarting
+    * from the same checkpoint replays uncommitted batches with the SAME
+    * batchId, so (appId, batchId) uniquely names each micro-batch across
+    * restarts. The formula and every prefix are the watermark keys of
+    * state tables already on disk — changing either makes a replay after
+    * an upgrade fold its batch twice. */
+  private def appIdOf(prefix: String, checkpointDir: String): String =
+    prefix + java.security.MessageDigest.getInstance("MD5")
+      .digest(checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map("%02x".format(_)).mkString
+
+  /** The one foreachBatch drain: run `body` on every micro-batch of `in`
+    * that `checkpointDir` has not committed, AvailableNow, and return the
+    * finished query. */
+  private def drain(in: DataFrame, checkpointDir: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    runToEnd(in.writeStream.foreachBatch(body)
+      .option("checkpointLocation", checkpointDir))
+
+  /** Start `w` under `Trigger.AvailableNow` and block until it has drained
+    * everything currently available. */
+  private def runToEnd(w: DataStreamWriter[Row]): StreamingQuery = {
+    val q = w.trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    q
+  }
 
   /** Append-only streaming ingest (the append_inserts load mode as a
     * stream): parquet dir → system cols → parquet sink, exactly-once via
@@ -31,14 +60,10 @@ object StreamingIngest {
       .withColumn(SystemCols.timestamp, current_timestamp())
       .withColumn(SystemCols.isDeleted, lit(false))
       .withColumn(SystemCols.isFullLoad, lit(false))
-    val q = out.writeStream
+    runToEnd(out.writeStream
       .format("parquet")
       .option("path", destDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+      .option("checkpointLocation", checkpointDir))
   }
 
   /** Streaming CDC: each micro-batch runs ONE full SCD2 sync of the
@@ -67,17 +92,10 @@ object StreamingIngest {
     val in = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", filesPerSnapshot.toString)
       .parquet(sourceDir)
-    val q = in.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val src = new graft.sources.DataFrameSource(batch.localCheckpoint(true), pks)
-        new graft.scd2.Synchronizer(spark, src, destRoot, cfg).execute()
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    drain(in, checkpointDir) { (batch, _) =>
+      val src = new graft.sources.DataFrameSource(truncate(batch), pks)
+      new graft.scd2.Synchronizer(spark, src, destRoot, cfg).execute(): Unit
+    }
   }
 
   /** Stream INTO a foreign Delta table exactly-once: `foreachBatch` lands
@@ -97,16 +115,10 @@ object StreamingIngest {
       tablePath: String,
       appId: String,
       checkpointDir: String): StreamingQuery = {
-    val q = source.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        new graft.store.ForeignDeltaTable(spark, tablePath)
-          .appendIdempotent(batch.localCheckpoint(true), appId, batchId): Unit
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    drain(source, checkpointDir) { (batch, batchId) =>
+      new graft.store.ForeignDeltaTable(spark, tablePath)
+        .appendIdempotent(truncate(batch), appId, batchId): Unit
+    }
   }
 
   /** Watermarked tumbling-window aggregation over an event stream — the
@@ -189,14 +201,10 @@ object StreamingIngest {
       queryName: String): StreamingQuery = {
     val in = spark.readStream.schema(schema).parquet(sourceDir)
     val agg = windowedCounts(in, tsCol)
-    val q = agg.writeStream
+    runToEnd(agg.writeStream
       .format("memory")
       .queryName(queryName)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+      .outputMode("complete"))
   }
 
   /** Rolling DEDUP ingest — the production streaming shape of
@@ -220,23 +228,11 @@ object StreamingIngest {
       destDir: String,
       fpDir: String,
       checkpointDir: String): StreamingQuery = {
-    // The stream's identity for idempotency is its checkpoint: restarting
-    // from the same checkpoint replays uncommitted batches with the SAME
-    // batchId, so (appId derived from checkpointDir, batchId) uniquely
-    // names each micro-batch across restarts.
-    val appId = "dedupIngest-" + java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val in = spark.readStream.schema(schema).parquet(sourceDir)
-    val q = in.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+    val appId = appIdOf("dedupIngest-", checkpointDir)
+    drain(spark.readStream.schema(schema).parquet(sourceDir), checkpointDir) {
+      (batch, batchId) =>
         dedupIngestBatch(batch, batchId, idCol, textCol, destDir, fpDir, appId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    }
   }
 
   /** One `dedupIngest` micro-batch — EXACTLY-ONCE under foreachBatch's
@@ -277,7 +273,7 @@ object StreamingIngest {
         Dedup.exactIncremental(winners.drop("__fp"), idCol, textCol,
           fpTable.read(), strategy = "probe")
       else winners.drop("__fp")
-    val out = survivors.localCheckpoint(true)
+    val out = truncate(survivors)
     Dedup.releaseIntermediates()
     new graft.store.VersionedTable(s, destDir).appendIdempotent(out, appId, batchId)
     fpTable.appendIdempotent(
@@ -309,20 +305,12 @@ object StreamingIngest {
       steps: Seq[String],
       stateDir: String,
       checkpointDir: String): StreamingQuery = {
-    val appId = "funnelIngest-" + java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val in = spark.readStream.schema(schema).parquet(sourceDir)
-    val q = in.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+    val appId = appIdOf("funnelIngest-", checkpointDir)
+    drain(spark.readStream.schema(schema).parquet(sourceDir), checkpointDir) {
+      (batch, batchId) =>
         funnelIngestBatch(batch, batchId, keyCol, typeCol, tsCol, steps,
           stateDir, appId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    }
   }
 
   private[graft] def funnelIngestBatch(
@@ -349,7 +337,7 @@ object StreamingIngest {
     // BEFORE the overwrite commits (snapshot isolation keeps the old files
     // readable, but eager evaluation also surfaces the fold's late-data
     // refusal inside THIS batch, before any commit)
-    tbl.overwriteIdempotent(next.localCheckpoint(true), appId, batchId)
+    tbl.overwriteIdempotent(truncate(next), appId, batchId)
   }
 
   /** STREAMING retention maintenance — the [[funnelIngest]] sibling with a
@@ -373,20 +361,12 @@ object StreamingIngest {
       bucketWidth: Long,
       stateDir: String,
       checkpointDir: String): StreamingQuery = {
-    val appId = "retentionIngest-" + java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val in = spark.readStream.schema(schema).parquet(sourceDir)
-    val q = in.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+    val appId = appIdOf("retentionIngest-", checkpointDir)
+    drain(spark.readStream.schema(schema).parquet(sourceDir), checkpointDir) {
+      (batch, batchId) =>
         retentionIngestBatch(batch, batchId, keyCol, tsCol, bucketWidth,
           stateDir, appId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    }
   }
 
   private[graft] def retentionIngestBatch(
@@ -405,7 +385,7 @@ object StreamingIngest {
       if (tbl.exists)
         Temporal.retentionFresh(tbl.read(), ev, keyCol, tsCol, bucketWidth)
       else Temporal.retentionState(ev, keyCol, tsCol, bucketWidth)
-    tbl.appendIdempotent(delta.localCheckpoint(true), appId, batchId)
+    tbl.appendIdempotent(truncate(delta), appId, batchId)
   }
 
   /** STREAMING transition-matrix maintenance — the third sibling
@@ -429,20 +409,12 @@ object StreamingIngest {
       matrixDir: String,
       frontierDir: String,
       checkpointDir: String): StreamingQuery = {
-    val appId = "transitionsIngest-" + java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val in = spark.readStream.schema(schema).parquet(sourceDir)
-    val q = in.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+    val appId = appIdOf("transitionsIngest-", checkpointDir)
+    drain(spark.readStream.schema(schema).parquet(sourceDir), checkpointDir) {
+      (batch, batchId) =>
         transitionsIngestBatch(batch, batchId, keyCol, typeCol, tsCol, tieBreak,
           matrixDir, frontierDir, appId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    }
   }
 
   /** STREAMING sessionization maintenance — the fourth sibling: each
@@ -468,20 +440,12 @@ object StreamingIngest {
       assignDir: String,
       frontierDir: String,
       checkpointDir: String): StreamingQuery = {
-    val appId = "sessionsIngest-" + java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val in = spark.readStream.schema(schema).parquet(sourceDir)
-    val q = in.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+    val appId = appIdOf("sessionsIngest-", checkpointDir)
+    drain(spark.readStream.schema(schema).parquet(sourceDir), checkpointDir) {
+      (batch, batchId) =>
         sessionsIngestBatch(batch, batchId, keyCol, tsCol, maxGap, tieBreak,
           assignDir, frontierDir, appId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    }
   }
 
   private[graft] def sessionsIngestBatch(
@@ -508,8 +472,8 @@ object StreamingIngest {
     // materialize BOTH before either commit (the frontier derives from the
     // files being replaced; eager evaluation also surfaces the fold's
     // strictly-later refusal inside THIS batch)
-    val ac = assigned.localCheckpoint(true)
-    val fc = f1.localCheckpoint(true)
+    val ac = truncate(assigned)
+    val fc = truncate(f1)
     aTbl.appendIdempotent(ac, appId, batchId)
     fTbl.overwriteIdempotent(fc, appId, batchId)
   }
@@ -531,20 +495,12 @@ object StreamingIngest {
       mantissaBits: Int,
       histDir: String,
       checkpointDir: String): StreamingQuery = {
-    val appId = "quantilesIngest-" + java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val in = spark.readStream.schema(schema).parquet(sourceDir)
-    val q = in.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+    val appId = appIdOf("quantilesIngest-", checkpointDir)
+    drain(spark.readStream.schema(schema).parquet(sourceDir), checkpointDir) {
+      (batch, batchId) =>
         quantilesIngestBatch(batch, batchId, groupCol, valueCol, mantissaBits,
           histDir, appId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    }
   }
 
   private[graft] def quantilesIngestBatch(
@@ -563,7 +519,7 @@ object StreamingIngest {
     val h = Sketches.quantileSketchHistogram(
       batch.select(groupCol, valueCol).toDF(), groupCol, valueCol, mantissaBits)
     val next = if (tbl.exists) Sketches.quantileSketchFold(tbl.read(), h) else h
-    tbl.overwriteIdempotent(next.localCheckpoint(true), appId, batchId)
+    tbl.overwriteIdempotent(truncate(next), appId, batchId)
   }
 
   /** STREAMING HLL maintenance — the sixth maintainer, and the only one
@@ -584,20 +540,12 @@ object StreamingIngest {
       hashBits: Int,
       stateDir: String,
       checkpointDir: String): StreamingQuery = {
-    val appId = "hllIngest-" + java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val in = spark.readStream.schema(schema).parquet(sourceDir)
-    val q = in.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+    val appId = appIdOf("hllIngest-", checkpointDir)
+    drain(spark.readStream.schema(schema).parquet(sourceDir), checkpointDir) {
+      (batch, batchId) =>
         hllIngestBatch(batch, batchId, groupCol, hashCol, p, hashBits,
           stateDir, appId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    }
   }
 
   private[graft] def hllIngestBatch(
@@ -618,7 +566,7 @@ object StreamingIngest {
     val bs = Sketches.hllRegisterState(
       batch.select(groupCol, hashCol).toDF(), groupCol, hashCol, p, hashBits)
     val next = if (tbl.exists) Sketches.hllFold(tbl.read(), bs) else bs
-    tbl.overwriteIdempotent(next.localCheckpoint(true), appId, batchId)
+    tbl.overwriteIdempotent(truncate(next), appId, batchId)
   }
 
   /** STREAMING count-min maintenance — the seventh maintainer: each
@@ -638,20 +586,12 @@ object StreamingIngest {
       width: Int,
       stateDir: String,
       checkpointDir: String): StreamingQuery = {
-    val appId = "countMinIngest-" + java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val in = spark.readStream.schema(schema).parquet(sourceDir)
-    val q = in.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+    val appId = appIdOf("countMinIngest-", checkpointDir)
+    drain(spark.readStream.schema(schema).parquet(sourceDir), checkpointDir) {
+      (batch, batchId) =>
         countMinIngestBatch(batch, batchId, hashCol, depth, width,
           stateDir, appId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    }
   }
 
   private[graft] def countMinIngestBatch(
@@ -670,7 +610,7 @@ object StreamingIngest {
     val bs = Sketches.countMinState(batch.select(hashCol).toDF(),
       hashCol, depth, width)
     val next = if (tbl.exists) Sketches.countMinFold(tbl.read(), bs) else bs
-    tbl.overwriteIdempotent(next.localCheckpoint(true), appId, batchId)
+    tbl.overwriteIdempotent(truncate(next), appId, batchId)
   }
 
   /** STREAMING KMV maintenance — the eighth maintainer, second of the
@@ -690,19 +630,11 @@ object StreamingIngest {
       k: Int,
       stateDir: String,
       checkpointDir: String): StreamingQuery = {
-    val appId = "kmvIngest-" + java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val in = spark.readStream.schema(schema).parquet(sourceDir)
-    val q = in.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+    val appId = appIdOf("kmvIngest-", checkpointDir)
+    drain(spark.readStream.schema(schema).parquet(sourceDir), checkpointDir) {
+      (batch, batchId) =>
         kmvIngestBatch(batch, batchId, groupCol, hashCol, k, stateDir, appId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    }
   }
 
   private[graft] def kmvIngestBatch(
@@ -720,7 +652,7 @@ object StreamingIngest {
     val bs = Sketches.kmvState(batch.select(groupCol, hashCol).toDF(),
       groupCol, hashCol, k)
     val next = if (tbl.exists) Sketches.kmvFold(tbl.read(), bs, k) else bs
-    tbl.overwriteIdempotent(next.localCheckpoint(true), appId, batchId)
+    tbl.overwriteIdempotent(truncate(next), appId, batchId)
   }
 
   /** STREAMING Bloom-filter maintenance — the tenth maintainer, third of
@@ -740,20 +672,12 @@ object StreamingIngest {
       numBits: Int,
       stateDir: String,
       checkpointDir: String): StreamingQuery = {
-    val appId = "bloomIngest-" + java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val in = spark.readStream.schema(schema).parquet(sourceDir)
-    val q = in.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+    val appId = appIdOf("bloomIngest-", checkpointDir)
+    drain(spark.readStream.schema(schema).parquet(sourceDir), checkpointDir) {
+      (batch, batchId) =>
         bloomIngestBatch(batch, batchId, hashCol, numHashes, numBits,
           stateDir, appId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    }
   }
 
   private[graft] def bloomIngestBatch(
@@ -773,7 +697,7 @@ object StreamingIngest {
     val bs = Sketches.bloomState(batch.select(hashCol).toDF(),
       hashCol, numHashes, numBits)
     val next = if (tbl.exists) Sketches.bloomFold(tbl.read(), bs) else bs
-    tbl.overwriteIdempotent(next.localCheckpoint(true), appId, batchId)
+    tbl.overwriteIdempotent(truncate(next), appId, batchId)
   }
 
   /** STREAMING decayed-counts maintenance — the twelfth maintainer: each
@@ -796,20 +720,12 @@ object StreamingIngest {
       decayDen: Int,
       stateDir: String,
       checkpointDir: String): StreamingQuery = {
-    val appId = "decayIngest-" + java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val in = spark.readStream.schema(schema).parquet(sourceDir)
-    val q = in.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+    val appId = appIdOf("decayIngest-", checkpointDir)
+    drain(spark.readStream.schema(schema).parquet(sourceDir), checkpointDir) {
+      (batch, batchId) =>
         decayIngestBatch(batch, batchId, keyCol, tsCol, bucketWidth,
           decayNum, decayDen, stateDir, appId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    }
   }
 
   private[graft] def decayIngestBatch(
@@ -828,11 +744,12 @@ object StreamingIngest {
     // the fold refuses late data, so a replay cannot no-op through it —
     // the txnApplied skip MUST come first (the r15 fold-replay rule)
     if (tbl.exists && tbl.txnApplied(appId, batchId)) return
-    if (batch.isEmpty) return
     val b = batch.toDF()
-    val frontier = b.agg(org.apache.spark.sql.functions.max(
-        Temporal.floorDiv(tsCol, bucketWidth)))
-      .head().getLong(0)
+    // one probe job for emptiness AND the frontier; an all-null ts batch
+    // has rows but a null max, and getLong refuses it
+    val probe = b.agg(count(lit(1)), max(Temporal.floorDiv(tsCol, bucketWidth))).head()
+    if (probe.getLong(0) == 0L) return
+    val frontier = probe.getLong(1)
     val next =
       if (tbl.exists) {
         // the fold reads geometry from the STATE's stamps — a caller whose
@@ -852,7 +769,7 @@ object StreamingIngest {
       } else
         Temporal.decayedCounts(b, keyCol, tsCol, bucketWidth,
           decayNum, decayDen, frontier)
-    tbl.overwriteIdempotent(next.localCheckpoint(true), appId, batchId)
+    tbl.overwriteIdempotent(truncate(next), appId, batchId)
   }
 
   /** STREAMING basket-co-occurrence maintenance — the eleventh
@@ -876,20 +793,12 @@ object StreamingIngest {
       itemsDir: String,
       totalsDir: String,
       checkpointDir: String): StreamingQuery = {
-    val appId = "basketsIngest-" + java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val in = spark.readStream.schema(schema).parquet(sourceDir)
-    val q = in.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+    val appId = appIdOf("basketsIngest-", checkpointDir)
+    drain(spark.readStream.schema(schema).parquet(sourceDir), checkpointDir) {
+      (batch, batchId) =>
         basketsIngestBatch(batch, batchId, basketCol, itemCol, maxBasketSize,
           pairsDir, itemsDir, totalsDir, appId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    }
   }
 
   private[graft] def basketsIngestBatch(
@@ -922,9 +831,9 @@ object StreamingIngest {
     // rides the PAIRS lineage only, and a deterministic raise after
     // totals/items had committed would leave a state no retry can repair
     // (their idempotent watermarks would forever hide the missing pairs)
-    val npC = np.localCheckpoint(true)
-    val niC = ni.localCheckpoint(true)
-    val nnC = nn.localCheckpoint(true)
+    val npC = truncate(np)
+    val niC = truncate(ni)
+    val nnC = truncate(nn)
     nTbl.overwriteIdempotent(nnC, appId, batchId)
     iTbl.overwriteIdempotent(niC, appId, batchId)
     pTbl.overwriteIdempotent(npC, appId, batchId)
@@ -954,20 +863,12 @@ object StreamingIngest {
       frontierDir: String,
       fillDir: String,
       checkpointDir: String): StreamingQuery = {
-    val appId = "gapFillIngest-" + java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val in = spark.readStream.schema(schema).parquet(sourceDir)
-    val q = in.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+    val appId = appIdOf("gapFillIngest-", checkpointDir)
+    drain(spark.readStream.schema(schema).parquet(sourceDir), checkpointDir) {
+      (batch, batchId) =>
         gapFillIngestBatch(batch, batchId, keyCol, tsCol, valueCol, tieBreak,
           bucketWidth, mode, frontierDir, fillDir, appId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    }
   }
 
   private[graft] def gapFillIngestBatch(
@@ -992,17 +893,17 @@ object StreamingIngest {
     if (ftbl.exists && ftbl.txnApplied(appId, batchId)) return
     if (batch.isEmpty) return
     val b = batch.toDF()
-    val fills = (if (ftbl.exists)
+    val fills = truncate(if (ftbl.exists)
         Temporal.gapFillContinue(ftbl.read(), b, keyCol, tsCol, valueCol,
           tieBreak, bucketWidth, mode)
       else Temporal.gapFill(b, keyCol, tsCol, valueCol, tieBreak,
-        bucketWidth, mode)).localCheckpoint(true)
+        bucketWidth, mode))
     otbl.appendIdempotent(fills, appId, batchId)
-    val nf = (if (ftbl.exists)
+    val nf = truncate(if (ftbl.exists)
         Temporal.gapFillFrontierFold(ftbl.read(), b, keyCol, tsCol, valueCol,
           tieBreak, bucketWidth)
       else Temporal.gapFillFrontier(b, keyCol, tsCol, valueCol, tieBreak,
-        bucketWidth)).localCheckpoint(true)
+        bucketWidth))
     ftbl.overwriteIdempotent(nf, appId, batchId)
   }
 
@@ -1036,8 +937,8 @@ object StreamingIngest {
     // materialize BOTH before either overwrite commits (each derives from
     // the files being replaced; eager evaluation also surfaces the fold's
     // late-data refusal inside THIS batch)
-    val m1c = m1.localCheckpoint(true)
-    val f1c = f1.localCheckpoint(true)
+    val m1c = truncate(m1)
+    val f1c = truncate(f1)
     mTbl.overwriteIdempotent(m1c, appId, batchId)
     fTbl.overwriteIdempotent(f1c, appId, batchId)
   }

@@ -985,17 +985,26 @@ class PipelineOpsSpec extends SparkSuite {
       }
       ref = nodes.map(id => id -> (150000000L + mass(id))).toMap
     }
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val got = Graph.pageRankX1e9(edges.toDF("src", "dst"), iters)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == ref)
-    val fresh = spark.sparkContext.getPersistentRDDs.keySet -- before
-    // 3 loop invariants (edges, nodes, outdeg) + the rounds since the last
-    // flush (20 % 8 = 4, plus the flushed round itself) — far below the
-    // iters + 4 = 24 the unbounded lazy chain held live
-    assert(fresh.size <= 12,
-      s"expected bounded live round caches, got ${fresh.size} new persistent RDDs")
-    Dedup.releaseIntermediates()
+    def run(): Unit = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val got = Graph.pageRankX1e9(edges.toDF("src", "dst"), iters)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == ref)
+      val fresh = spark.sparkContext.getPersistentRDDs.keySet -- before
+      // 3 loop invariants (edges, nodes, outdeg) + the rounds since the last
+      // flush (20 % 8 = 4, plus the flushed round itself) — far below the
+      // iters + 4 = 24 the unbounded lazy chain held live
+      assert(fresh.size <= 12,
+        s"expected bounded live round caches, got ${fresh.size} new persistent RDDs")
+      Dedup.releaseIntermediates()
+    }
+    run()
+    // under a checkpoint dir the flushes take Caching.truncate's reliable
+    // branch: same scores, same bound, and the cuts land as files
+    withCheckpointDir { dir =>
+      run()
+      assert(checkpointFiles(dir) > 0, "no reliable checkpoint was written")
+    }
   }
 
   test("bm25TopK: randomized corpora equal a driver-side reference") {

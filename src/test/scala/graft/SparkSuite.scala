@@ -28,4 +28,23 @@ abstract class SparkSuite extends AnyFunSuite {
     Files.createTempDirectory(prefix).toString
   def rowsOf(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
+
+  /** Run `body` with a fresh reliable checkpoint dir set on the shared
+    * context (its path is passed in), then restore the previous setting,
+    * so `Caching.truncate` takes its reliable branch only inside `body`. */
+  def withCheckpointDir[A](body: String => A): A = {
+    val sc = spark.sparkContext
+    val prev = sc.getCheckpointDir
+    val dir = tmpDir("graft-ckpt")
+    sc.setCheckpointDir(dir)
+    try body(dir)
+    finally org.apache.spark.CheckpointDirAccess.restore(sc, prev)
+  }
+
+  /** Number of checkpoint part files written under a checkpoint dir. */
+  def checkpointFiles(dir: String): Long = {
+    val s = Files.walk(java.nio.file.Paths.get(dir))
+    try s.filter(p => p.getFileName.toString.startsWith("part-")).count()
+    finally s.close()
+  }
 }

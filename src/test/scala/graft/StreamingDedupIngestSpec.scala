@@ -93,5 +93,12 @@ class StreamingDedupIngestSpec extends SparkSuite {
     StreamingIngest.dedupIngest(spark, src, schema, "doc_id", "text", dest, fp, ckpt)
     assert(ids(dest) == Seq(1L, 3L, 5L))
     assert(fps(fp).distinct.size == 3)
+    // the txn watermark key is "dedupIngest-" + md5(checkpointDir): state
+    // tables written before an upgrade carry it, so a replay afterwards
+    // must find its batches under the very same key
+    val md5hex = java.security.MessageDigest.getInstance("MD5")
+      .digest(ckpt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map("%02x".format(_)).mkString
+    assert(new VersionedTable(spark, dest).txnApplied("dedupIngest-" + md5hex, 0L))
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSuite
 
 /** r16 optimization: the label-propagation convergence count rides each
-  * round's eager localCheckpoint as an Observation (one Spark job per
+  * round's eager checkpoint as an Observation (one Spark job per
   * round, not checkpoint + count). These graphs force MULTIPLE rounds, so
   * the fused path — not just the seed round — produces the labels. */
 class ClustersFusedLoopSpec extends SparkSuite {
@@ -59,14 +59,21 @@ class ClustersFusedLoopSpec extends SparkSuite {
     import spark.implicits._
     val pairs = (0L until 6L).map(i => (i, i + 1)).toDF("id_a", "id_b")
       .localCheckpoint(true) // freeze upstream so only loop actions vary
-    try {
+    // budget: edges eager persist (1) + seed checkpoint (1) + one
+    // checkpoint action per propagation round (diameter 5 ⇒ ≤ 6 rounds)
+    // + the final count (1) = ≤ 9. The pre-fusion shape added one count
+    // action per round (≥ 13 on this graph). It holds for the local AND the
+    // reliable (checkpoint-dir) truncation: the Observation must fire on
+    // either, or the observedRowOr recount would add one action per round.
+    def check(): Unit = try {
       val n = countActions(Dedup.duplicateClusters(pairs).count(): Unit)
-      // budget: edges eager persist (1) + seed checkpoint (1) + one
-      // checkpoint action per propagation round (diameter 5 ⇒ ≤ 6 rounds)
-      // + the final count (1) = ≤ 9. The pre-fusion shape added one count
-      // action per round (≥ 13 on this graph).
       assert(n <= 9, s"expected fused per-round actions, got $n")
     } finally Dedup.releaseIntermediates()
+    check()
+    withCheckpointDir { dir =>
+      check()
+      assert(checkpointFiles(dir) > 0, "no reliable checkpoint was written")
+    }
   }
 
   test("stars loop: one ACTION per round (fixpoint rides the checkpoint)") {
@@ -75,7 +82,13 @@ class ClustersFusedLoopSpec extends SparkSuite {
     val chain = (0L until 9L).map(i => (i, i + 1))
     val star = (101L to 105L).map(i => (100L, i))
     val pairs = (chain ++ star).toDF("id_a", "id_b").localCheckpoint(true)
-    try {
+    // budget: base persist (1) + nodes persist (1) + edges persist (1)
+    // + initial edge count (1) + ONE checkpoint per round (≤ 5 rounds on
+    // this graph) + the final labels collect (1) = ≤ 10. The pre-fusion
+    // shape ran next.except(edges).isEmpty as its own action on every
+    // count-equal round — always at least the final round (≥ 11 here).
+    // Checked for the local and the reliable (checkpoint-dir) truncation.
+    def check(): Unit = try {
       var labels: Map[Long, Long] = Map.empty
       val n = countActions {
         labels = Dedup.duplicateClustersStars(pairs)
@@ -83,12 +96,12 @@ class ClustersFusedLoopSpec extends SparkSuite {
       }
       (0L to 9L).foreach(i => assert(labels(i) == 0L, s"chain node $i"))
       (100L to 105L).foreach(i => assert(labels(i) == 100L, s"star node $i"))
-      // budget: base persist (1) + nodes persist (1) + edges persist (1)
-      // + initial edge count (1) + ONE checkpoint per round (≤ 5 rounds on
-      // this graph) + the final labels collect (1) = ≤ 10. The pre-fusion
-      // shape ran next.except(edges).isEmpty as its own action on every
-      // count-equal round — always at least the final round (≥ 11 here).
       assert(n <= 10, s"expected one action per stars round, got $n")
     } finally Dedup.releaseIntermediates()
+    check()
+    withCheckpointDir { dir =>
+      check()
+      assert(checkpointFiles(dir) > 0, "no reliable checkpoint was written")
+    }
   }
 }

@@ -109,30 +109,39 @@ class HllSpec extends SparkSuite {
   }
 
   test("maintainer batch replay folds to the identical state (no txn guard)") {
-    val root = java.nio.file.Files.createTempDirectory("hll-replay")
-    val dir = root.toString + "/tbl"
     val batch0 = (1 to 400).map(i => (s"g${i % 2}", md5Hash60(s"k$i")))
       .toDF("g", "h")
     val batch1 = (300 to 700).map(i => (s"g${i % 2}", md5Hash60(s"k$i")))
       .toDF("g", "h")
-    def served = Sketches.hllOf(
-      new graft.store.VersionedTable(spark, dir).read(), P, Bits)
-      .collect().map(_.toSeq).toSet
-    graft.streaming.StreamingIngest.hllIngestBatch(
-      batch0, 0L, "g", "h", P, Bits, dir, "app")
-    graft.streaming.StreamingIngest.hllIngestBatch(
-      batch1, 1L, "g", "h", P, Bits, dir, "app")
-    val after = served
-    // replay batch 1 (the at-least-once delivery case): the max-fold
-    // re-applies harmlessly — no txnApplied guard needed, unlike the
-    // additive histogram/transition folds
-    graft.streaming.StreamingIngest.hllIngestBatch(
-      batch1, 1L, "g", "h", P, Bits, dir, "app")
-    assert(served == after)
-    // and the result equals the one-shot over the union
     val oneShot = Sketches.hllSketch(batch0.union(batch1).distinct(),
       "g", "h", P, Bits).collect().map(_.toSeq).toSet
-    assert(served == oneShot)
+    def drive(): Unit = {
+      val root = java.nio.file.Files.createTempDirectory("hll-replay")
+      val dir = root.toString + "/tbl"
+      def served = Sketches.hllOf(
+        new graft.store.VersionedTable(spark, dir).read(), P, Bits)
+        .collect().map(_.toSeq).toSet
+      graft.streaming.StreamingIngest.hllIngestBatch(
+        batch0, 0L, "g", "h", P, Bits, dir, "app")
+      graft.streaming.StreamingIngest.hllIngestBatch(
+        batch1, 1L, "g", "h", P, Bits, dir, "app")
+      val after = served
+      // replay batch 1 (the at-least-once delivery case): the max-fold
+      // re-applies harmlessly — no txnApplied guard needed, unlike the
+      // additive histogram/transition folds
+      graft.streaming.StreamingIngest.hllIngestBatch(
+        batch1, 1L, "g", "h", P, Bits, dir, "app")
+      assert(served == after)
+      // and the result equals the one-shot over the union
+      assert(served == oneShot)
+    }
+    drive()
+    // the same batches under a checkpoint dir: the fold's materialization
+    // takes Caching.truncate's reliable branch and writes checkpoint files
+    withCheckpointDir { ckpt =>
+      drive()
+      assert(checkpointFiles(ckpt) > 0, "no reliable checkpoint was written")
+    }
   }
 
   test("geometry violations refuse loudly") {
